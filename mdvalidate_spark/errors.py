@@ -77,15 +77,6 @@ class InvalidBoundsError(SchemaError):
         self.rule_id = rule_id
 
 
-class UnboundedRepeatNotLastError(SchemaError):
-    """Analog of RepeatingMatcherUnbounded (reference lists.rs:151-162):
-    in an ordered chain of count rules, only the last may be open-ended."""
-
-    def __init__(self, rule_id: str):
-        super().__init__(f"rule {rule_id!r}: open-ended bound must be last in chain")
-        self.rule_id = rule_id
-
-
 class UnknownColumnError(SchemaError):
     def __init__(self, rule_id: str, column: str):
         super().__init__(f"rule {rule_id!r}: unknown column {column!r}")

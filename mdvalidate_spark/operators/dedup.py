@@ -1134,18 +1134,6 @@ def duplicate_clusters(
     )
 
 
-def char_grams(text: Column, k: int = 3) -> Column:
-    """Distinct character k-grams of the normalized text — array primitives
-    only (sequence + transform + substr), stays inside codegen like the word
-    shingles()."""
-    s = normalize_text(text)
-    n = F.length(s)
-    idx = F.when(n < k, F.array().cast("array<int>")).otherwise(
-        F.sequence(F.lit(1), n - (k - 1))
-    )
-    return F.array_distinct(F.transform(idx, lambda i: s.substr(i, F.lit(k))))
-
-
 def edit_distance_duplicates(
     df: DataFrame,
     text_col: str = "text",

@@ -160,10 +160,7 @@ def benford_report(
     return _report_frame(df.sparkSession, rows, counts, column, tol, min_rows)
 
 
-# Fixed partials schema: reloading a checkpointed partials dir MUST pass
-# this explicitly (never infer) — a rule whose `when` scope matched zero
-# rows in its first validated batch writes a directory with no part files,
-# and schema inference on it raises, making the checkpoint unresumable.
+# explicit reload schema of persisted digit partials (partials.read_partials)
 BENFORD_PARTIALS_DDL = (
     "rows bigint, "
     + ", ".join(f"d{d} bigint" for d in range(1, 10))

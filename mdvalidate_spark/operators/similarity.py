@@ -1002,12 +1002,11 @@ def _health_rule_verdict(spark, row, rule, run_id: str):
 
 
 def health_partials_ddl(dim: int) -> str:
-    """Explicit schema for persisted health partials (never infer — a
-    `when`-scoped rule whose first batch had zero in-scope rows leaves a
-    part-file-less directory that inference refuses, the Benford reload
-    contract). Wide dims persist the per-dimension sums as two array
-    columns instead of 2·dim unrolled doubles (parquet-friendly either
-    way; the unrolled narrow layout is kept for checkpoint compatibility)."""
+    """Explicit reload schema of persisted health partials
+    (partials.read_partials). Wide dims persist the per-dimension sums as
+    two array columns instead of 2·dim unrolled doubles (parquet-friendly
+    either way; the unrolled narrow layout is kept for checkpoint
+    compatibility)."""
     _check_health_dim(dim)
     if dim > _HEALTH_DIM_BUDGET:
         return (

@@ -1,7 +1,8 @@
 """Key-skew diagnostics: heavy hitters and skew statistics for a column.
 
-North-rule context: the engine HANDLES phash-hotspot skew (salted two-phase
-uniqueness, AQE skew joins) — this module DETECTS it, so a pipeline can
+North-rule context: the engine HANDLES phash-hotspot skew (single-phase
+uniqueness count with map-side combine, AQE skew joins) — this module
+DETECTS it, so a pipeline can
 flag a shard whose key distribution would melt a downstream join before
 that join runs at 10^12 rows.
 
@@ -377,9 +378,8 @@ def concentration_partials(
     )
 
 
-#: explicit reload schema — NEVER infer: a `when`-scoped rule whose first
-#: validated batch had zero in-scope rows writes a part-file-less
-#: directory that schema inference refuses (the Benford resume lesson)
+#: explicit reload schema of persisted value-count partials
+#: (partials.read_partials)
 CONCENTRATION_PARTIALS_DDL = "v string, n bigint, partition_id int"
 
 

@@ -92,13 +92,6 @@ def alpha_ratio(text: Column) -> Column:
     return F.when(total == 0, F.lit(0.0)).otherwise(alpha / total)
 
 
-def stopword_ratio(text: Column, stopwords: tuple[str, ...]) -> Column:
-    toks = tokens(F.lower(text))
-    hits = F.size(F.filter(toks, lambda x: x.isin(*stopwords)))
-    n = F.size(toks)
-    return F.when(n == 0, F.lit(0.0)).otherwise(hits / n)
-
-
 def quality_score(text: Column) -> Column:
     """Deterministic composite in [0,1]: alphabetic density × (1 − punct
     noise) × saturating length credit. Rounded to 6 dp so engines agree."""

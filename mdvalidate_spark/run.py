@@ -43,6 +43,7 @@ from .operators import agg_rules, drift as drift_ops, pixel as pixel_ops
 from .operators.ref_rules import ref_violations
 from .operators.row_rules import row_violations, with_partition_id
 from .errors import KIND_OVER_VOLUME, KIND_UNDER_VOLUME, SchemaError
+from .partials import partial_units, read_partials, write_partitioned
 from .plans.manifest import FAILED, FINALIZED, Manifest, VALIDATED
 from .spec import Spec
 
@@ -265,20 +266,13 @@ class ValidationRun:
         # in-memory accumulation (checkpointed runs also persist to parquet)
         self._violation_dfs: list[DataFrame] = []
         self._metric_dfs: list[DataFrame] = []
-        # mergeable per-partition stats partials (incremental=True stats
-        # rules): one tiny frame per batch; finalize merges them instead of
-        # rescanning the table
-        self._stats_partials: list[DataFrame] = []
-        # incremental sweep-drift: frozen bin edges per rule (first batch
-        # defines them; persisted so a resumed run bins identically) and
-        # accumulated per-batch histogram partial frames per rule
+        # mergeable partials of the incremental rule families (partials.py):
+        # one tiny frame per batch per checkpoint key; finalize merges them
+        # instead of rescanning the table
+        self._partial_units = partial_units(self.program)
+        self._partials: dict[str, list[DataFrame]] = {}
+        # incremental sweep drift: bin edges frozen on the first batch
         self._drift_frozen_edges: dict[str, list] = {}
-        self._drift_partials: dict[str, list[DataFrame]] = {}
-        # accumulated per-batch Benford digit partials per incremental rule
-        self._benford_partials: dict[str, list[DataFrame]] = {}
-        self._concentration_partials: dict[str, list[DataFrame]] = {}
-        # accumulated per-batch embedding-matrix partials per incremental rule
-        self._health_partials: dict[str, list[DataFrame]] = {}
         self._finalized = False
         self._schema_checked = False
         self._schema_violations = 0
@@ -331,7 +325,6 @@ class ValidationRun:
         self._dim_fp_cache: dict | None = None
         self.gate_skipped: list[int] = []
         if checkpoint_dir:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             if self.fingerprint_gate:
                 self._apply_fingerprint_gate()
             self._reload_persisted()
@@ -821,74 +814,11 @@ class ValidationRun:
             viols.append(dv)
             mets.append(dm)
 
-        for dr in (r for r in prog.drift_rules if r.incremental):
-            edges = self._frozen_edges(dr, batch_df)
-            partial = self._keep(
-                drift_ops.sweep_histogram_partials(batch_df, dr, edges)
-            )
-            self._drift_partials.setdefault(dr.id, []).append(partial)
+        for fam, key, rules in self._partial_units:
+            frame = self._keep(fam.partial(self, rules, batch_df))
+            self._partials.setdefault(key, []).append(frame)
             if self.checkpoint_dir:
-                partial.write.mode("overwrite").partitionBy(
-                    "partition_id"
-                ).parquet(self._sink(f"drift_partials/{dr.id}"))
-
-        inc_stats = tuple(r for r in prog.stats_rules if r.incremental)
-        if inc_stats:
-            partials = self._keep(
-                agg_rules.column_stats_partials(batch_df, inc_stats, self.run_id)
-            )
-            self._stats_partials.append(partials)
-            if self.checkpoint_dir:
-                # dynamic partition overwrite → re-validating a partition
-                # replaces its partial (idempotent resume, same as lineage)
-                partials.write.mode("overwrite").partitionBy(
-                    "partition_id"
-                ).parquet(self._sink("stats_partials"))
-
-        from .spec import BenfordRule as _BenfordRule
-
-        for br in (
-            r for r in prog.group_rules
-            if isinstance(r, _BenfordRule) and r.incremental
-        ):
-            from .operators.digits import benford_rule_partials
-
-            bp = self._keep(benford_rule_partials(batch_df, br))
-            self._benford_partials.setdefault(br.id, []).append(bp)
-            if self.checkpoint_dir:
-                bp.write.mode("overwrite").partitionBy("partition_id").parquet(
-                    self._sink(f"benford_partials/{br.id}")
-                )
-
-        from .spec import ConcentrationRule as _ConcRule
-
-        for cr in (
-            r for r in prog.group_rules
-            if isinstance(r, _ConcRule) and r.incremental
-        ):
-            from .operators.skew import concentration_partials
-
-            cp = self._keep(concentration_partials(batch_df, cr))
-            self._concentration_partials.setdefault(cr.id, []).append(cp)
-            if self.checkpoint_dir:
-                cp.write.mode("overwrite").partitionBy("partition_id").parquet(
-                    self._sink(f"concentration_partials/{cr.id}")
-                )
-
-        from .spec import EmbeddingHealthRule as _EmbHealthRule
-
-        for hr in (
-            r for r in prog.group_rules
-            if isinstance(r, _EmbHealthRule) and r.incremental
-        ):
-            from .operators.similarity import embedding_health_partials
-
-            hp = self._keep(embedding_health_partials(batch_df, hr))
-            self._health_partials.setdefault(hr.id, []).append(hp)
-            if self.checkpoint_dir:
-                hp.write.mode("overwrite").partitionBy("partition_id").parquet(
-                    self._sink(f"health_partials/{hr.id}")
-                )
+                write_partitioned(frame, self._sink(key))
 
         cap = spec.max_violations_per_rule
         full_viol = _union(viols, self.spark, _VIOLATIONS_DDL)
@@ -1022,22 +952,16 @@ class ValidationRun:
         bins — so first-batch quantiles are a sound bin definition."""
         if rule.id in self._drift_frozen_edges:
             return self._drift_frozen_edges[rule.id]
-        import json as _json
-
-        path = (
-            os.path.join(self.checkpoint_dir, f"drift_edges_{rule.id}.json")
-            if self.checkpoint_dir
-            else None
-        )
+        path = self._sink(f"drift_edges_{rule.id}.json")
         if path and os.path.exists(path):
             with open(path) as f:
-                edges = _json.load(f)
+                edges = json.load(f)
         elif batch_df is not None:
             edges = drift_ops.compute_edges(batch_df, rule)
             if path:
                 os.makedirs(self.checkpoint_dir, exist_ok=True)
                 with open(path, "w") as f:
-                    _json.dump(edges, f)
+                    json.dump(edges, f)
         else:
             raise RuntimeError(
                 f"rule {rule.id!r}: drift partials exist but the frozen-edge "
@@ -1144,6 +1068,8 @@ class ValidationRun:
             from .spec import MonotonicRule as _MonotonicRule
             from .spec import OutlierRule as _OutlierRule
 
+            if getattr(gr, "incremental", False):
+                continue  # merged from its partials below
             if isinstance(gr, UniqueRule):
                 viols.append(
                     agg_rules.unique_violations(self.df, gr, self.run_id)
@@ -1178,66 +1104,21 @@ class ValidationRun:
                 viols.append(
                     agg_rules.freshness_violations(self.df, gr, self.run_id)
                 )
-            elif isinstance(gr, _BenfordRule):
-                from .operators.digits import (
-                    benford_rule_results,
-                    benford_rule_results_from_partials,
-                )
+            elif isinstance(
+                gr, (_BenfordRule, _ConcentrationRule, _EmbeddingHealthRule)
+            ):
+                # a partials family without incremental=True: full scan
+                from .operators.digits import benford_rule_results
+                from .operators.similarity import embedding_health_rule_results
+                from .operators.skew import concentration_rule_results
 
-                pieces = self._benford_partials.get(gr.id, [])
-                if gr.incremental and pieces:
-                    # merge the persisted digit partials — O(#partitions),
-                    # never a table rescan (the incremental EOF pass)
-                    merged = reduce(lambda a, b: a.unionByName(b), pieces)
-                    b_viol, b_met = benford_rule_results_from_partials(
-                        merged, gr, self.run_id
-                    )
-                else:
-                    b_viol, b_met = benford_rule_results(
-                        self.df, gr, self.run_id
-                    )
-                viols.append(b_viol)
-                mets.append(b_met)
-            elif isinstance(gr, _ConcentrationRule):
-                from .operators.skew import (
-                    concentration_rule_results,
-                    concentration_rule_results_from_partials,
-                )
-
-                pieces = self._concentration_partials.get(gr.id, [])
-                if gr.incremental and pieces:
-                    # merge the persisted value-count partials —
-                    # O(partitions × values), never a table rescan
-                    merged = reduce(lambda a, b: a.unionByName(b), pieces)
-                    c_viol, c_met = concentration_rule_results_from_partials(
-                        merged, gr, self.run_id
-                    )
-                else:
-                    c_viol, c_met = concentration_rule_results(
-                        self.df, gr, self.run_id
-                    )
-                viols.append(c_viol)
-                mets.append(c_met)
-            elif isinstance(gr, _EmbeddingHealthRule):
-                from .operators.similarity import (
-                    embedding_health_rule_results,
-                    embedding_health_rule_results_from_partials,
-                )
-
-                pieces = self._health_partials.get(gr.id, [])
-                if gr.incremental and pieces:
-                    # merge the persisted matrix partials — O(#partitions),
-                    # never a table rescan (the incremental EOF pass)
-                    merged = reduce(lambda a, b: a.unionByName(b), pieces)
-                    e_viol, e_met = embedding_health_rule_results_from_partials(
-                        merged, gr, self.run_id
-                    )
-                else:
-                    e_viol, e_met = embedding_health_rule_results(
-                        self.df, gr, self.run_id
-                    )
-                viols.append(e_viol)
-                mets.append(e_met)
+                g_viol, g_met = {
+                    _BenfordRule: benford_rule_results,
+                    _ConcentrationRule: concentration_rule_results,
+                    _EmbeddingHealthRule: embedding_health_rule_results,
+                }[type(gr)](self.df, gr, self.run_id)
+                viols.append(g_viol)
+                mets.append(g_met)
             elif isinstance(gr, _GapRule):
                 from .operators.gaps import gap_violations
 
@@ -1264,19 +1145,23 @@ class ValidationRun:
         # are pulled out of `mets` here and merged back after the fused job
         # resolves, so the whole global-metrics stage costs ONE table scan
         full_stats = tuple(r for r in prog.stats_rules if not r.incremental)
-        inc_stats = tuple(r for r in prog.stats_rules if r.incremental)
         vp = tuple(r for r in full_stats if r.top_values or r.entropy)
         if vp:  # exact value-distribution metrics: one shared grouped pass
             mets.append(agg_rules.value_profile_metrics(self.df, vp, self.run_id))
-        if inc_stats and self._stats_partials:
-            # merge the persisted per-partition partials — O(#partitions),
-            # never a table rescan (the incremental EOF pass)
-            merged = reduce(
-                lambda a, b: a.unionByName(b), self._stats_partials
+
+        # incremental families merge their kept partials — O(#partitions),
+        # never a table rescan (the incremental EOF pass); a run finalized
+        # before any batch takes the partial of the whole table instead
+        for fam, key, rules in self._partial_units:
+            pieces = self._partials.get(key)
+            p_viol, p_met = fam.result(
+                self, rules,
+                reduce(DataFrame.unionByName, pieces) if pieces
+                else fam.partial(self, rules, self.df),
             )
-            mets.append(
-                agg_rules.column_stats_from_partials(merged, inc_stats, self.run_id)
-            )
+            if p_viol is not None:
+                viols.append(p_viol)
+            mets.append(p_met)
 
         for sq in prog.sequence_rules:  # groups may span engine partitions
             from .operators.sequence import sequence_violations
@@ -1437,22 +1322,6 @@ class ValidationRun:
                     self.df, dr, self.run_id, self._drift_edges(dr)
                 )
 
-            def _run_drift_inc(dr):
-                # incremental sweep: merge the accumulated histogram
-                # partials — O(groups × bins), no table rescan
-                pieces = self._drift_partials.get(dr.id, [])
-                if not pieces:
-                    return (
-                        _empty(self.spark, _VIOLATIONS_DDL),
-                        _empty(self.spark, _METRICS_DDL),
-                        0,
-                    )
-                merged = reduce(lambda a, b: a.unionByName(b), pieces)
-                return drift_ops.drift_sweep_from_partials(
-                    self.spark, merged, dr, self.run_id,
-                    self._frozen_edges(dr, None),
-                )
-
             def _run_drift_ref(ref_name, drs):
                 # two-table rules sharing one reference frame FUSE into a
                 # single drift_vs_reference call: one stacked histogram scan
@@ -1546,24 +1415,22 @@ class ValidationRun:
             ref_groups: dict[str, list] = {}
             plain_drift = []
             for dr in prog.drift_rules:
+                if dr.incremental:
+                    continue  # merged from its partials above
                 if dr.reference:
                     ref_groups.setdefault(dr.reference, []).append(dr)
                 else:
                     plain_drift.append(dr)
-            # plain non-incremental, non-sweep rules ride the fused global
-            # aggregation; sweeps need their per-group histogram pass and
-            # incremental rules merge persisted partials
-            fusable_drift = [
-                dr for dr in plain_drift
-                if not dr.incremental and not dr.sweep_by
-            ]
+            # plain non-sweep rules ride the fused global aggregation;
+            # sweeps need their per-group histogram pass
+            fusable_drift = [dr for dr in plain_drift if not dr.sweep_by]
             fused_fut = (
                 pool.submit(_run_fused_global)
                 if (full_stats or fusable_drift)
                 else None
             )
             drift_futs = [
-                pool.submit(_run_drift_inc if dr.incremental else _run_drift, dr)
+                pool.submit(_run_drift, dr)
                 for dr in plain_drift
                 if dr not in fusable_drift
             ] + [
@@ -1807,12 +1674,8 @@ class ValidationRun:
             return
         # dynamic partition overwrite → re-running a partition replaces its
         # lineage instead of appending duplicates (idempotent resume)
-        viol.write.mode("overwrite").partitionBy("partition_id").parquet(
-            self._sink("violations")
-        )
-        met.write.mode("overwrite").partitionBy("partition_id").parquet(
-            self._sink("metrics")
-        )
+        write_partitioned(viol, self._sink("violations"))
+        write_partitioned(met, self._sink("metrics"))
 
     def _persist_global(self, viol: DataFrame, met: DataFrame) -> None:
         if not self.checkpoint_dir:
@@ -1823,90 +1686,29 @@ class ValidationRun:
     def _reload_persisted(self) -> None:
         """On resume, load already-persisted per-partition outputs so report()
         includes prior batches."""
-        done = {
+        done = sorted(
             p
             for p, e in self.manifest.entries.items()
             if e["status"] in (VALIDATED, FINALIZED)
-        }
-        for name, ddl, target in (
+        )
+        if not done:
+            return
+        # explicit schemas throughout: a batch with no in-scope rows leaves
+        # a part-file-less directory that schema inference refuses
+        reloads = [
             ("violations", _VIOLATIONS_DDL, self._violation_dfs),
             ("metrics", _METRICS_DDL, self._metric_dfs),
-        ):
+        ] + [
+            (key, fam.schema(self, rules), self._partials.setdefault(key, []))
+            for fam, key, rules in self._partial_units
+        ]
+        for name, schema, target in reloads:
             path = self._sink(name)
-            if path and os.path.exists(path):
-                if done:
-                    df = self.spark.read.schema(ddl).parquet(path)
-                    target.append(
-                        df.where(F.col("partition_id").isin(list(done)))
+            if os.path.exists(path):
+                target.append(
+                    read_partials(self.spark, path, schema).where(
+                        F.col("partition_id").isin(done)
                     )
-        # incremental stats partials: schema is spec-dependent (one column
-        # set per ruleset), so read with inference; only validated
-        # partitions' partials count toward the merged stats
-        sp_path = self._sink("stats_partials")
-        if sp_path and os.path.exists(sp_path) and done:
-            self._stats_partials.append(
-                self.spark.read.parquet(sp_path).where(
-                    F.col("partition_id").isin(list(done))
-                )
-            )
-        # incremental sweep-drift partials: one dir per rule
-        for dr in self.program.drift_rules:
-            if not dr.incremental:
-                continue
-            dp = self._sink(f"drift_partials/{dr.id}")
-            if dp and os.path.exists(dp) and done:
-                self._drift_partials.setdefault(dr.id, []).append(
-                    self.spark.read.parquet(dp).where(
-                        F.col("partition_id").isin(list(done))
-                    )
-                )
-        # incremental Benford digit partials: one dir per rule. Explicit
-        # schema (never infer): a `when`-scoped rule whose first validated
-        # batch had zero in-scope rows leaves a part-file-less directory
-        # that schema inference refuses, which would make the checkpoint
-        # unresumable.
-        from .operators.digits import BENFORD_PARTIALS_DDL
-        from .spec import BenfordRule as _BenfordRule
-
-        for br in self.program.group_rules:
-            if not (isinstance(br, _BenfordRule) and br.incremental):
-                continue
-            bp = self._sink(f"benford_partials/{br.id}")
-            if bp and os.path.exists(bp) and done:
-                self._benford_partials.setdefault(br.id, []).append(
-                    self.spark.read.schema(BENFORD_PARTIALS_DDL)
-                    .parquet(bp)
-                    .where(F.col("partition_id").isin(list(done)))
-                )
-        # incremental concentration value-count partials: one dir per
-        # rule, same explicit-schema reload contract as Benford
-        from .operators.skew import CONCENTRATION_PARTIALS_DDL
-        from .spec import ConcentrationRule as _ConcRule
-
-        for cr in self.program.group_rules:
-            if not (isinstance(cr, _ConcRule) and cr.incremental):
-                continue
-            cp = self._sink(f"concentration_partials/{cr.id}")
-            if cp and os.path.exists(cp) and done:
-                self._concentration_partials.setdefault(cr.id, []).append(
-                    self.spark.read.schema(CONCENTRATION_PARTIALS_DDL)
-                    .parquet(cp)
-                    .where(F.col("partition_id").isin(list(done)))
-                )
-        # incremental embedding-matrix partials: one dir per rule, same
-        # explicit-schema reload contract (the DDL is dim-dependent)
-        from .operators.similarity import health_partials_ddl
-        from .spec import EmbeddingHealthRule as _EmbHealthRule
-
-        for hr in self.program.group_rules:
-            if not (isinstance(hr, _EmbHealthRule) and hr.incremental):
-                continue
-            hp = self._sink(f"health_partials/{hr.id}")
-            if hp and os.path.exists(hp) and done:
-                self._health_partials.setdefault(hr.id, []).append(
-                    self.spark.read.schema(health_partials_ddl(hr.dim))
-                    .parquet(hp)
-                    .where(F.col("partition_id").isin(list(done)))
                 )
 
     def _save_manifest(self) -> None:

@@ -13,6 +13,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """min(48g, 40% of physical RAM): a fixed 48g lets a small host's JVM grow
+    past physical RAM until the kernel kills it."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf (Windows)
+        return "48g"
+    return f"{min(48 * 1024, int(ram * 0.4) // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "mdvalidate-spark",
     master: str | None = None,
@@ -59,7 +69,10 @@ def get_spark(
         # cores × in-flight Arrow batches of binary payloads, or GC thrash
         # makes high parallelism SLOWER than low (observed 8g: local[32] ran
         # 4x slower than local[8] on the pixel stage)
-        .config("spark.driver.memory", os.environ.get("MDV_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("MDV_DRIVER_MEM", _default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -80,11 +80,6 @@ def common_columns(files: list[str]) -> dict:
     return common
 
 
-def parquet_columns(files: list[str]) -> list[str]:
-    """Names-only view of common_columns (kept for API stability)."""
-    return list(common_columns(files))
-
-
 def footer_meta(path: str, cache: dict | None = None) -> dict:
     """One footer read per file: row-group count, per-row-group row counts,
     and per-row-group (min, max, null_count) statistics of partition_id

@@ -137,10 +137,6 @@ def synthetic_images(
     )
 
 
-def dim_fmt(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([("jpeg",), ("png",), ("webp",)], "fmt string")
-
-
 def dim_source(spark: SparkSession, n: int = 100) -> DataFrame:
     return spark.range(n).select(
         F.format_string("src%04d", F.col("id").cast("int")).alias("source_id"),

@@ -558,8 +558,9 @@ class TextQualityRule(Rule):
 
 @dataclass(frozen=True)
 class UniqueRule(Rule):
-    """Column(s) must be globally unique. Skew-aware: evaluated with a salted
-    two-phase aggregation (see operators/agg_rules.py). ``when`` scopes the
+    """Column(s) must be globally unique. Skew-aware: evaluated as one count
+    aggregation whose map-side partial aggregation combines a hot key's rows
+    before the exchange (see operators/agg_rules.py). ``when`` scopes the
     uniqueness to the sub-population where the predicate is TRUE (e.g. phash
     unique among fmt='png' rows); out-of-scope rows neither collide nor are
     reported."""

@@ -26,7 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..compile import ConstraintProgram
+from ..operators import agg_rules, similarity
 from ..operators.row_rules import _check
+from ..partials import read_partials, write_partitioned
 from ..spec import CountRule
 
 
@@ -158,40 +160,45 @@ def stream_stats_partials(
     directory merges on demand with ``merged_stream_stats`` in O(#batches),
     so "profile the stream so far" never replays the stream.
 
-    Exactly-once: the write is a dynamic partition overwrite on
-    partition_id = batch_id, so a replayed micro-batch (foreachBatch
-    replays after failure) overwrites its own partial instead of
-    double-counting. Returns the started StreamingQuery."""
-    from ..operators.agg_rules import column_stats_partials
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        p = column_stats_partials(
-            batch_df.withColumn("partition_id", F.lit(int(batch_id)).cast("int")),
-            tuple(rules),
-            run_id,
-        )
-        (
-            p.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("partition_id")
-            .parquet(partials_dir)
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
+    Exactly-once: see ``_stream_partials``. Returns the started
+    StreamingQuery."""
+    return _stream_partials(
+        stream_df,
+        lambda b: agg_rules.column_stats_partials(b, tuple(rules), run_id),
+        partials_dir, checkpoint_dir, trigger,
     )
-    return writer.start()
 
 
 def merged_stream_stats(spark, rules, partials_dir: str, run_id: str = "stream"):
     """Merge everything ``stream_stats_partials`` accumulated so far into
-    the standard long metrics rows — O(#micro-batches), no stream replay."""
-    from ..operators.agg_rules import column_stats_from_partials
+    the standard long metrics rows — O(#micro-batches), no stream replay.
+    The stats partial's columns follow the stream's dtypes, which are not
+    known here, so this one reload infers its schema."""
+    partials = read_partials(spark, partials_dir, None)
+    return agg_rules.column_stats_from_partials(partials, tuple(rules), run_id)
 
-    partials = spark.read.parquet(partials_dir)
-    return column_stats_from_partials(partials, tuple(rules), run_id)
+
+def _stream_partials(
+    stream_df: DataFrame, partial, partials_dir: str, checkpoint_dir: str,
+    trigger: dict | None,
+):
+    """Start a foreachBatch query persisting ``partial`` of each
+    micro-batch, keyed by partition_id = batch_id, through the run
+    lifecycle's partials writer. Exactly-once: a replayed micro-batch
+    overwrites its own partial instead of double-counting."""
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        pid = F.lit(int(batch_id)).cast("int")
+        write_partitioned(
+            partial(batch_df.withColumn("partition_id", pid)), partials_dir
+        )
+
+    return (
+        stream_df.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
 
 
 def windowed_drift_rule(
@@ -578,32 +585,12 @@ def stream_health_partials(
     deliberately never one pandas frame per batch), all summed by the
     merge.
 
-    Exactly-once: dynamic partition overwrite on partition_id = batch_id —
-    a replayed micro-batch (foreachBatch replays after failure) overwrites
-    its own partial instead of double-counting (the stream_stats_partials
-    contract). Returns the started StreamingQuery."""
-    from ..operators.similarity import embedding_health_partials
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        p = embedding_health_partials(
-            batch_df.withColumn(
-                "partition_id", F.lit(int(batch_id)).cast("int")
-            ),
-            rule,
-        )
-        (
-            p.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("partition_id")
-            .parquet(partials_dir)
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
+    Exactly-once: see ``_stream_partials``. Returns the started
+    StreamingQuery."""
+    return _stream_partials(
+        stream_df, lambda b: similarity.embedding_health_partials(b, rule),
+        partials_dir, checkpoint_dir, trigger,
     )
-    return writer.start()
 
 
 def merged_stream_health(spark, rule, partials_dir: str, run_id: str = "stream"):
@@ -611,12 +598,9 @@ def merged_stream_health(spark, rule, partials_dir: str, run_id: str = "stream")
     the rule's standard (violations, metrics) frames — O(#micro-batches),
     no stream replay, same arithmetic as the batch paths (explicit
     dim-dependent schema so an empty first batch stays readable)."""
-    from ..operators.similarity import (
-        embedding_health_rule_results_from_partials,
-        health_partials_ddl,
+    partials = read_partials(
+        spark, partials_dir, similarity.health_partials_ddl(rule.dim)
     )
-
-    partials = spark.read.schema(health_partials_ddl(rule.dim)).parquet(
-        partials_dir
+    return similarity.embedding_health_rule_results_from_partials(
+        partials, rule, run_id
     )
-    return embedding_health_rule_results_from_partials(partials, rule, run_id)

@@ -6,6 +6,7 @@ import shutil
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.testing import assertDataFrameEqual
 
 from mdvalidate_spark.run import ValidationRun, validate_table
 from mdvalidate_spark.sources.synthetic import (
@@ -445,3 +446,79 @@ def test_fast_path_guard_min_count_rule_zero_in_scope_partition(spark, tmp_path)
     v = rep.violations.where(F.col("rule_id") == "min_ok").collect()
     assert [r["partition_id"] for r in v] == [2]  # zero in-scope rows
     run.release()
+
+
+def test_checkpointed_run_leaves_session_conf_and_replaces_lineage(
+    spark, images, tmp_path
+):
+    """A checkpointed run asks for dynamic partition overwrite per write
+    instead of setting it on the caller's session: the session value is
+    unchanged after validate(), and re-validating a partition still replaces
+    its persisted lineage (under the session's static mode, a partitioned
+    overwrite would instead wipe every other partition)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        ckpt = str(tmp_path / "ck-conf")
+        dims = {"dim_source": dim_source(spark)}
+
+        def run():
+            return ValidationRun(
+                spark, full_spec(), images, dims=dims, run_id="r-conf",
+                checkpoint_dir=ckpt,
+            )
+
+        def persisted():
+            return dict(
+                spark.read.parquet(f"{ckpt}/violations")
+                .groupBy("partition_id").count().collect()
+            )
+
+        run().validate()
+        assert spark.conf.get(key) == "STATIC"
+        before = persisted()
+        assert len(before) > 1
+        run()._validate_batch([0])  # re-validate one partition
+        assert spark.conf.get(key) == "STATIC"
+        assert persisted() == before
+    finally:
+        spark.conf.set(key, prior)
+
+
+@pytest.mark.parametrize(
+    "rule",
+    [
+        ColumnStatsRule("st_w", column="w", incremental=True),
+        DriftRule(
+            "sw_w", column="w", sweep_by="fmt", method="psi", threshold=0.5,
+            incremental=True,
+        ),
+    ],
+    ids=["stats", "sweep_drift"],
+)
+def test_resume_after_empty_batch(spark, tmp_path, rule):
+    """A batch over a partition with no rows leaves a partials directory
+    without part files. A run resuming that checkpoint must reload it with
+    an explicit schema (inference refuses such a directory) and report
+    exactly what an uninterrupted run over the same batches reports."""
+    df = spark.createDataFrame(
+        [("a", 10, "png"), ("b", 20, "jpeg"), ("c", 30, "png")],
+        "image_id string, w int, fmt string",
+    )
+    spec = Spec(rules=(rule,), key_column="image_id", n_partitions=16)
+    ckpt = str(tmp_path / "ck-empty")
+    first = ValidationRun(spark, spec, df, run_id="r-empty", checkpoint_dir=ckpt)
+    occupied = {r["partition_id"] for r in first.df.select("partition_id").collect()}
+    empty = min(set(range(16)) - occupied)
+    first._validate_batch([empty])
+
+    resumed = ValidationRun(
+        spark, spec, df, run_id="r-empty", checkpoint_dir=ckpt
+    ).validate()
+    straight = ValidationRun(spark, spec, df, run_id="r-empty")
+    straight._validate_batch([empty])
+    expected = straight.validate()
+    assertDataFrameEqual(resumed.metrics, expected.metrics)
+    assertDataFrameEqual(resumed.violations, expected.violations)
+    assert resumed.metrics.where(F.col("rule_id") == rule.id).count() > 0
