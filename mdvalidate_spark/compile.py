@@ -10,26 +10,30 @@ groups rules into execution *stages* so each stage is one fused DataFrame pass
 container in a single child sweep (containers.rs:212-230) rather than one walk
 per rule.
 
-Stage families:
-  row    — NotNull/Regex/Literal/Range/Domain: ONE fused select over the scan
-  group  — Unique/Count: shuffling aggregations (salted where skew-prone)
-  ref    — RefIntegrity: broadcast left-anti joins
-  stats  — ColumnStats: one agg pass emitting metrics
-  pixel  — PixelRule: Arrow-batched mapInPandas decode stage (only stage that
-           reads the binary column — column pruning keeps it out of all others)
-  drift  — DriftRule: global finalize-only (needs full-table view)
+Each rule kind declares its stage once, as ``stage`` beside its ``kind`` on
+its spec.py class; stage ``s`` fills ``ConstraintProgram.s_rules`` (STAGES):
+  schema  — SchemaRule: driver-side metadata compare, before any scan
+  row     — the per-row kinds: ONE fused select over the scan (+ ref: broadcast
+            joins fused into it)
+  count / capture — per-partition Count (no group_by) / capture metrics
+  pixel / degenerate — the Arrow-batched decode stage, the only one that reads
+            the binary column (column pruning keeps it out of all others)
+  stats   — ColumnStats: one agg pass emitting metrics
+  group   — Unique, grouped Count and the other whole-table kinds: shuffling
+            aggregations; metric_bound fuses all bounds into one aggregation
+  drift, sequence, overlap, volume — global, finalize-only
 
-Incremental semantics (reference validator.rs:101-185): row/ref/stats/pixel
-stages are per-partition (evaluated only on pending partitions); group+drift
-are *global* and run in the finalize pass — the analog of the reference's
-EOF full revalidation (validator.rs:162-168) that produces the canonical
-error set once all input has arrived.
+Incremental semantics (reference validator.rs:101-185): the schema, row, ref,
+count, capture, pixel and degenerate stages are per-partition (evaluated only
+on pending partitions); the others are *global* and run in the finalize pass
+— the analog of the reference's EOF full revalidation (validator.rs:162-168)
+that produces the canonical error set once all input has arrived.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 from .errors import (
     ConflictingRulesError,
@@ -62,7 +66,6 @@ from .spec import (
     LiteralRule,
     MetricBoundRule,
     MonotonicRule,
-    NotNullRule,
     OutlierRule,
     OverlapRule,
     PiiRule,
@@ -79,25 +82,8 @@ from .spec import (
     UniqueRule,
     VectorRule,
     VolumeRule,
+    parse_bound_metric,
 )
-
-ROW_KINDS = (
-    NotNullRule,
-    RegexRule,
-    CompositeRegexRule,
-    LiteralRule,
-    RangeRule,
-    DomainRule,
-    VectorRule,
-    AlignmentRule,
-    ExprRule,
-    FormatRule,
-    HeaderRule,
-    PiiRule,
-    RepetitionRule,
-    TextQualityRule,
-)
-
 
 @dataclass(frozen=True)
 class ConstraintProgram:
@@ -121,70 +107,56 @@ class ConstraintProgram:
     # columns any per-partition stage needs (for pruned scans)
     scan_columns: tuple[str, ...] = field(default=())
 
-    @property
-    def all_rules(self) -> tuple[Rule, ...]:
-        return self.spec.rules
+
+# stage names, in ConstraintProgram order: a rule compiles into <stage>_rules
+STAGES = tuple(
+    f.name[: -len("_rules")] for f in fields(ConstraintProgram)
+    if f.name.endswith("_rules")
+)
 
 
-def _has_column(available, path: str) -> bool:
-    """Column-existence check that understands dotted struct paths when given
-    a StructType (the reference steps INTO nested structure and validates
-    inside — QuoteVsQuote, walkers/validators/quotes.rs:21-66). A plain
-    column-name list only matches top-level names."""
+def _lookup(available, path: str):
+    """(found, DataType or None) for a (possibly dotted) column path. A
+    StructType is walked into nested structs (the reference steps INTO nested
+    structure and validates inside — QuoteVsQuote,
+    walkers/validators/quotes.rs:21-66); a plain column-name list only
+    matches top-level names and carries no types."""
     try:
         from pyspark.sql.types import StructType
     except ImportError:  # pure-python compile callers without pyspark
-        return path in available
+        return path in available, None
     if not isinstance(available, StructType):
-        return path in available
+        return path in available, None
     cur = available
     for part in path.split("."):
-        if not isinstance(cur, StructType):
-            return False
-        match = next((f for f in cur.fields if f.name == part), None)
-        if match is None:
-            return False
+        match = isinstance(cur, StructType) and next(
+            (f for f in cur.fields if f.name == part), None
+        )
+        if not match:
+            return False, None
         cur = match.dataType
-    return True
+    return True, cur
 
 
-def _column_type(available, path: str):
-    """Resolved DataType of a (possibly dotted) column path, or None when
-    ``available`` is a plain name list / the path does not resolve (existence
-    is _has_column's job — this is only for type-aware lints)."""
-    try:
-        from pyspark.sql.types import StructType
-    except ImportError:
-        return None
-    if not isinstance(available, StructType):
-        return None
-    cur = available
-    for part in path.split("."):
-        if not isinstance(cur, StructType):
-            return None
-        match = next((f for f in cur.fields if f.name == part), None)
-        if match is None:
-            return None
-        cur = match.dataType
-    return cur
-
-
-def _require_string_column(r: Rule, column: str, available_columns) -> None:
-    """Text-shaped rules (PII, repetition) read characters: on a non-string
-    column the regex/split primitives would silently cast instead of failing
-    loudly — demand StringType when a typed schema is available."""
-    if available_columns is None:
-        return
-    t = _column_type(available_columns, column)
+def _require_type(r: Rule, column: str, available_columns, types, what="",
+                  message=None) -> None:
+    """Typed-column lint: when a typed schema resolves ``column``, its type
+    must be one of ``types`` (pyspark.sql.types class names). A wrong type
+    would otherwise be cast silently instead of failing loudly. ``message(t)``
+    replaces the standard "must be <what>" wording."""
+    t = None if available_columns is None else _lookup(available_columns, column)[1]
     if t is None:
         return
-    from pyspark.sql.types import StringType
+    from pyspark.sql import types as T
 
-    if not isinstance(t, StringType):
-        raise SchemaError(
-            f"rule {r.id!r}: column {column!r} must be STRING for a "
-            f"{r.kind} rule, got {t.simpleString()}"
-        )
+    if isinstance(t, tuple(getattr(T, n) for n in types)):
+        return
+    t = t.simpleString()
+    article = "an" if r.kind[0] in "aeiou" else "a"
+    raise SchemaError(f"rule {r.id!r}: " + (
+        message(t) if message else
+        f"column {column!r} must be {what} for {article} {r.kind} rule, got {t}"
+    ))
 
 
 def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
@@ -293,7 +265,7 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
                     f"rule {r.id!r}: unknown PII kind(s) {bad}; "
                     f"valid: {', '.join(PII_KINDS)}"
                 )
-            _require_string_column(r, r.column, available_columns)
+            _require_type(r, r.column, available_columns, ("StringType",), "STRING")
 
         if isinstance(r, FormatRule):
             if r.format not in FORMATS:
@@ -305,7 +277,7 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
             # implicit cast would re-render the value (e.g. a real DATE column
             # prints as yyyy-MM-dd and trivially passes) — that's a no-op
             # check hiding a spec mistake, so demand STRING like PII/repetition
-            _require_string_column(r, r.column, available_columns)
+            _require_type(r, r.column, available_columns, ("StringType",), "STRING")
 
         if isinstance(r, RepetitionRule):
             from .operators.text import REPETITION_METRIC_LIMITS, REPETITION_METRICS
@@ -323,7 +295,7 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
                 )
             if r.min_words < 0:
                 raise SchemaError(f"rule {r.id!r}: min_words must be >= 0")
-            _require_string_column(r, r.column, available_columns)
+            _require_type(r, r.column, available_columns, ("StringType",), "STRING")
 
         if isinstance(r, TextQualityRule):
             from .operators.text import _QUALITY_COLS
@@ -342,7 +314,7 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
                 raise SchemaError(
                     f"rule {r.id!r}: min {r.min} > max {r.max}"
                 )
-            _require_string_column(r, r.column, available_columns)
+            _require_type(r, r.column, available_columns, ("StringType",), "STRING")
 
         if isinstance(r, LiteralRule):
             if (r.value is None) == (r.other_column is None):
@@ -385,8 +357,6 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
             raise SchemaError(f"rule {r.id!r}: empty domain")
 
         if isinstance(r, MetricBoundRule):
-            from .spec import parse_bound_metric
-
             try:
                 parse_bound_metric(r.metric)
             except ValueError as e:
@@ -460,17 +430,7 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
                 raise SchemaError(
                     f"rule {r.id!r}: min_rows must be >= 1, got {r.min_rows}"
                 )
-            if available_columns is not None:
-                t = _column_type(available_columns, r.column)
-                if t is not None:
-                    from pyspark.sql.types import NumericType
-
-                    if not isinstance(t, NumericType):
-                        raise SchemaError(
-                            f"rule {r.id!r}: column {r.column!r} must be "
-                            "numeric for a benford rule, got "
-                            f"{t.simpleString()}"
-                        )
+            _require_type(r, r.column, available_columns, ("NumericType",), "numeric")
 
         if isinstance(r, EmbeddingHealthRule):
             if not r.column:
@@ -510,17 +470,7 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
                 raise SchemaError(
                     f"rule {r.id!r}: min_rows must be >= 1, got {r.min_rows}"
                 )
-            if available_columns is not None:
-                t = _column_type(available_columns, r.column)
-                if t is not None:
-                    from pyspark.sql.types import ArrayType
-
-                    if not isinstance(t, ArrayType):
-                        raise SchemaError(
-                            f"rule {r.id!r}: column {r.column!r} must be "
-                            "an array type for an embedding_health rule, "
-                            f"got {t.simpleString()}"
-                        )
+            _require_type(r, r.column, available_columns, ("ArrayType",), "an array type")
 
         if isinstance(r, ConcentrationRule):
             if not r.column:
@@ -573,17 +523,10 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
                     f"rule {r.id!r}: bucket_seconds must be > 0, "
                     f"got {r.bucket_seconds}"
                 )
-            if available_columns is not None:
-                t = _column_type(available_columns, r.column)
-                if t is not None:
-                    from pyspark.sql.types import DateType, TimestampType
-
-                    if not isinstance(t, (DateType, TimestampType)):
-                        raise SchemaError(
-                            f"rule {r.id!r}: column {r.column!r} must be a "
-                            "timestamp/date for a gap rule, got "
-                            f"{t.simpleString()}"
-                        )
+            _require_type(
+                r, r.column, available_columns, ("DateType", "TimestampType"),
+                "a timestamp/date",
+            )
 
         if isinstance(r, FreshnessRule):
             if not r.column:
@@ -704,22 +647,15 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
                     f"the {len(r.magic) // 2}-byte magic prefix — the code "
                     "byte would be constrained to a magic byte"
                 )
-            if available_columns is not None:
-                # header extraction is byte arithmetic: on a STRING column
-                # substring/hex operate per CHARACTER, so multibyte text
-                # silently mis-extracts instead of failing loudly — demand
-                # BinaryType when a typed schema is available (ADVICE r3)
-                t = _column_type(available_columns, r.column)
-                if t is not None:
-                    from pyspark.sql.types import BinaryType
-
-                    if not isinstance(t, BinaryType):
-                        raise SchemaError(
-                            f"rule {r.id!r}: header rule column "
-                            f"{r.column!r} must be BINARY, got "
-                            f"{t.simpleString()} (byte offsets are not "
-                            "character offsets)"
-                        )
+            # header extraction is byte arithmetic: on a STRING column
+            # substring/hex operate per CHARACTER, so multibyte text
+            # silently mis-extracts instead of failing loudly — demand
+            # BinaryType when a typed schema is available (ADVICE r3)
+            _require_type(
+                r, r.column, available_columns, ("BinaryType",),
+                message=lambda t: f"header rule column {r.column!r} must be BINARY, "
+                f"got {t} (byte offsets are not character offsets)",
+            )
 
         if isinstance(r, (PixelRule, DegenerateImageRule)):
             # lower bound 1e-6: the kernel's sample threshold is integer
@@ -738,18 +674,13 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
             # '1e+20' vs '1.0E20') the two paths would pick DIFFERENT
             # sample rows. Demand a string key when sampling is on and a
             # typed schema is available (ADVICE r4); cast upstream.
-            if r.sample_rate < 1 and available_columns is not None:
-                kt = _column_type(available_columns, spec.key_column)
-                if kt is not None:
-                    from pyspark.sql.types import StringType
-
-                    if not isinstance(kt, StringType):
-                        raise SchemaError(
-                            f"rule {r.id!r}: sample_rate < 1 requires a "
-                            f"STRING key column for path-identical sample "
-                            f"membership; key {spec.key_column!r} is "
-                            f"{kt.simpleString()} — cast it upstream"
-                        )
+            if r.sample_rate < 1:
+                _require_type(
+                    r, spec.key_column, available_columns, ("StringType",),
+                    message=lambda t: "sample_rate < 1 requires a STRING key column "
+                    "for path-identical sample membership; key "
+                    f"{spec.key_column!r} is {t} — cast it upstream",
+                )
 
         if isinstance(r, DegenerateImageRule):
             if r.contrast_floor < 0:
@@ -767,18 +698,11 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
                     f"rule {r.id!r}: grayscale_floor must be >= 0, got "
                     f"{r.grayscale_floor}"
                 )
-            if available_columns is not None:
-                t = _column_type(available_columns, r.bytes_column)
-                if t is not None:
-                    from pyspark.sql.types import BinaryType
-
-                    if not isinstance(t, BinaryType):
-                        raise SchemaError(
-                            f"rule {r.id!r}: degenerate-image column "
-                            f"{r.bytes_column!r} must be BINARY, got "
-                            f"{t.simpleString()} (the payload is decoded "
-                            "as image bytes)"
-                        )
+            _require_type(
+                r, r.bytes_column, available_columns, ("BinaryType",),
+                message=lambda t: f"degenerate-image column {r.bytes_column!r} must "
+                f"be BINARY, got {t} (the payload is decoded as image bytes)",
+            )
 
         if isinstance(r, VolumeRule):
             if r.k <= 0:
@@ -943,16 +867,8 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
             # would yield an all-NULL envelope that flags nothing
             # (expr-typed rules are analyzed at run init instead — the
             # DriftRule.expr discipline)
-            if r.column and available_columns is not None:
-                t = _column_type(available_columns, r.column)
-                if t is not None:
-                    from pyspark.sql.types import NumericType
-
-                    if not isinstance(t, NumericType):
-                        raise SchemaError(
-                            f"rule {r.id!r}: column {r.column!r} must be "
-                            f"numeric for an outlier rule, got {t.simpleString()}"
-                        )
+            if r.column:
+                _require_type(r, r.column, available_columns, ("NumericType",), "numeric")
 
         if isinstance(r, AssociationRule):
             if not r.col_a or not r.col_b or r.col_a == r.col_b:
@@ -1004,7 +920,7 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
 
         if available_columns is not None:
             for c in r.targets():
-                if c and not _has_column(available_columns, c):
+                if c and not _lookup(available_columns, c)[0]:
                     from .errors import UnknownColumnError
 
                     raise UnknownColumnError(r.id, c)
@@ -1033,69 +949,21 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
                     "one sample"
                 )
 
-    row = tuple(r for r in spec.rules if isinstance(r, ROW_KINDS))
-    group = tuple(
-        r
-        for r in spec.rules
-        if isinstance(
-            r,
-            (
-                UniqueRule,
-                FunctionalDependencyRule,
-                FreshnessRule,
-                OutlierRule,
-                MonotonicRule,
-                AssociationRule,
-                BenfordRule,
-                ConcentrationRule,
-                EmbeddingHealthRule,
-                GapRule,
-            ),
-        )
-        or (isinstance(r, CountRule) and r.group_by)
-    )
-    counts = tuple(
-        r for r in spec.rules if isinstance(r, CountRule) and not r.group_by
-    )
-    refs = tuple(r for r in spec.rules if isinstance(r, RefIntegrityRule))
-    stats = tuple(r for r in spec.rules if isinstance(r, ColumnStatsRule))
-    metric_bounds = tuple(
-        r for r in spec.rules if isinstance(r, MetricBoundRule)
-    )
-    pixel = tuple(r for r in spec.rules if isinstance(r, PixelRule))
-    degenerate = tuple(
-        r for r in spec.rules if isinstance(r, DegenerateImageRule)
-    )
-    drift = tuple(r for r in spec.rules if isinstance(r, DriftRule))
-    overlaps = tuple(r for r in spec.rules if isinstance(r, OverlapRule))
-    captures = tuple(r for r in spec.rules if isinstance(r, CaptureRule))
-    sequences = tuple(r for r in spec.rules if isinstance(r, SequenceRule))
-    schema_checks = tuple(r for r in spec.rules if isinstance(r, SchemaDriftRule))
-    volumes = tuple(r for r in spec.rules if isinstance(r, VolumeRule))
+    stages: dict[str, list[Rule]] = {s: [] for s in STAGES}
+    for r in spec.rules:
+        stages[r.stage].append(r)
 
     scan_cols: list[str] = [spec.key_column]
     if spec.partition_column:
         scan_cols.append(spec.partition_column)
-    for r in (*row, *counts, *refs, *stats, *metric_bounds, *captures):
-        for c in r.targets():
-            if c and c not in scan_cols:
-                scan_cols.append(c)
+    for s in ("row", "count", "ref", "stats", "metric_bound", "capture"):
+        for r in stages[s]:
+            for c in r.targets():
+                if c and c not in scan_cols:
+                    scan_cols.append(c)
 
     return ConstraintProgram(
         spec=spec,
-        row_rules=row,
-        group_rules=group,
-        count_rules=counts,
-        ref_rules=refs,
-        stats_rules=stats,
-        metric_bound_rules=metric_bounds,
-        pixel_rules=pixel,
-        degenerate_rules=degenerate,
-        drift_rules=drift,
-        overlap_rules=overlaps,
-        capture_rules=captures,
-        sequence_rules=sequences,
-        schema_rules=schema_checks,
-        volume_rules=volumes,
         scan_columns=tuple(scan_cols),
+        **{f"{s}_rules": tuple(rs) for s, rs in stages.items()},
     )

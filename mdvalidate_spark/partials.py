@@ -114,11 +114,7 @@ FAMILIES = (
 def partial_units(program) -> list[tuple[Family, str, tuple]]:
     """(family, checkpoint key, rules) per partials frame of a compiled program:
     one for all incremental stats rules, one per rule of the other families."""
-    inc = [
-        r
-        for r in (*program.stats_rules, *program.drift_rules, *program.group_rules)
-        if getattr(r, "incremental", False)
-    ]
+    inc = [r for r in program.spec.rules if getattr(r, "incremental", False)]
     units = []
     for fam in FAMILIES:
         rules = tuple(r for r in inc if isinstance(r, fam.rule_type))

@@ -28,24 +28,37 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import statistics
 import tempfile
 import time
 import uuid
 from dataclasses import dataclass
 from functools import reduce
+from itertools import groupby
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .compile import ConstraintProgram, compile_spec
-from .operators import agg_rules, drift as drift_ops, pixel as pixel_ops
+from .operators import (
+    agg_rules, association, digits, drift as drift_ops, gaps, outliers,
+    overlap as overlap_ops, pixel as pixel_ops, sequence as sequence_ops,
+    similarity, skew,
+)
 from .operators.ref_rules import ref_violations
 from .operators.row_rules import row_violations, with_partition_id
 from .errors import KIND_OVER_VOLUME, KIND_UNDER_VOLUME, SchemaError
 from .partials import partial_units, read_partials, write_partitioned
 from .plans.manifest import FAILED, FINALIZED, Manifest, VALIDATED
-from .spec import Spec
+from .spec import (
+    NUMERIC_BOUND_METRICS, AssociationRule, BenfordRule, CompositeRegexRule,
+    ConcentrationRule, CountRule, EmbeddingHealthRule, ExprRule, FreshnessRule,
+    FunctionalDependencyRule, GapRule, MetricBoundRule, MonotonicRule,
+    OutlierRule, OverlapRule, SequenceRule, Spec, UniqueRule, VolumeRule,
+    parse_bound_metric,
+)
 
 _VIOLATIONS_DDL = (
     "run_id string, partition_id int, rule_id string, image_id string, "
@@ -113,6 +126,173 @@ def _analyze_expr(df, rule_id, expr, label, context, required_type=None):
     return dt
 
 
+@dataclass(frozen=True)
+class GlobalScope:
+    """What a global-stage evaluator reads besides its rules: the full table
+    (partition ids attached) and the run around it."""
+
+    df: DataFrame
+    run_id: str
+    spec: Spec
+    dims: dict
+    keep: Callable = lambda frame: frame  # caches a frame for the run's life
+    n_partitions: Callable = lambda: None  # engine partition count, if known
+    manifest: Manifest | None = None  # per-partition validated row counts
+
+
+def _volume_violations(s: GlobalScope, vr: VolumeRule) -> DataFrame | None:
+    # zero-scan stage: the MAD envelope over the manifest's own
+    # per-partition validated row counts (spec.VolumeRule docs) —
+    # O(#partitions) driver math over metadata the run already paid
+    # for, including zero-row partitions. statistics.median matches
+    # the operator/oracle interpolation (mean of middle two).
+    counted = sorted(
+        (pid, float(e["rows"]))
+        for pid, e in s.manifest.entries.items()
+        if e.get("rows") is not None
+    )
+    col = s.spec.partition_column or "partition_id"
+    rows_out = []
+    if vr.universe:
+        # wholly-missing partitions (data-derived ids never get
+        # a manifest entry — spec.VolumeRule docs): enumerate
+        # expected ids from the dims table, diff against the
+        # manifest. Absence is a fact, not an outlier —
+        # unconditional under_volume, independent of the MAD
+        # envelope and min_partitions. O(#partitions) rows.
+        ucol = vr.universe_column or col
+        expected_ids = {
+            int(r[0])
+            for r in s.dims[vr.universe]
+            .select(F.col(ucol).cast("long"))
+            .where(F.col(ucol).isNotNull())
+            .distinct()
+            .collect()
+        }
+        have = {int(pid) for pid, _ in counted}
+        for pid in sorted(expected_ids - have):
+            rows_out.append(
+                (
+                    s.run_id,
+                    int(pid),
+                    vr.id,
+                    str(pid),
+                    col,
+                    "partition present (>= 1 row)",
+                    "missing",
+                    KIND_UNDER_VOLUME,
+                )
+            )
+    if len(counted) >= vr.min_partitions:
+        ns = [n for _, n in counted]
+        center = statistics.median(ns)
+        mad = statistics.median([abs(n - center) for n in ns])
+        bound = max(vr.abs_tol, vr.k * 1.4826 * mad)
+        for pid, n in counted:
+            if abs(n - center) > bound:
+                rows_out.append(
+                    (
+                        s.run_id,
+                        int(pid),
+                        vr.id,
+                        str(pid),
+                        col,
+                        f"rows in [{center - bound:.1f}, "
+                        f"{center + bound:.1f}]",
+                        str(int(n)),
+                        KIND_OVER_VOLUME if n > center
+                        else KIND_UNDER_VOLUME,
+                    )
+                )
+    if rows_out:
+        return s.df.sparkSession.createDataFrame(rows_out, _VIOLATIONS_DDL)
+
+
+def _each(fn):
+    """Evaluator applying ``fn(scope, rule)`` → (violations or None, metrics
+    or None) to each rule."""
+    def evaluate(s, rules):
+        out = [fn(s, r) for r in rules]
+        return (
+            [v for v, _ in out if v is not None],
+            [m for _, m in out if m is not None],
+        )
+
+    return evaluate
+
+
+def _violations(fn, keyed: bool = False):
+    """Kind whose operator is ``fn(df, rule, run_id[, key_column])`` →
+    violations."""
+    key = (lambda s: (s.spec.key_column,)) if keyed else (lambda s: ())
+    return _each(lambda s, r: (fn(s.df, r, s.run_id, *key(s)), None))
+
+
+def _results(fn):
+    """Kind whose operator is ``fn(df, rule, run_id)`` → (violations,
+    metrics)."""
+    return _each(lambda s, r: fn(s.df, r, s.run_id))
+
+
+# stages evaluated in finalize through GLOBAL_EVALUATORS (stats and drift have
+# their own fused aggregate and concurrent jobs)
+GLOBAL_STAGES = ("group", "metric_bound", "sequence", "overlap", "volume")
+
+# one evaluator per global-stage kind, shared by ValidationRun.finalize and
+# FileIncrementalValidator.finalize: ``evaluate(scope, rules)`` takes adjacent
+# rules of its kind and returns (violation frames, metric frames)
+GLOBAL_EVALUATORS: dict[type, Callable] = {
+    UniqueRule: _violations(agg_rules.unique_violations),
+    FunctionalDependencyRule: _violations(agg_rules.fd_violations),
+    FreshnessRule: _violations(agg_rules.freshness_violations),
+    GapRule: _violations(gaps.gap_violations),
+    OutlierRule: _violations(outliers.outlier_violations, keyed=True),
+    MonotonicRule: _violations(sequence_ops.monotonic_violations, keyed=True),
+    # groups may span engine partitions
+    SequenceRule: _violations(sequence_ops.sequence_violations, keyed=True),
+    AssociationRule: _results(association.association_rule_results),
+    # the partials families, here without incremental=True: a full scan
+    BenfordRule: _results(digits.benford_rule_results),
+    ConcentrationRule: _results(skew.concentration_rule_results),
+    EmbeddingHealthRule: _results(similarity.embedding_health_rule_results),
+    # grouped counts only; per-partition counts run per batch
+    CountRule: _each(lambda s, r: (agg_rules.count_violations(
+        s.df, r, s.run_id,
+        universe=s.dims.get(r.universe) if r.universe else None,
+    ), None)),
+    # all bounds fuse into one aggregation pass; the 1-row result feeds both
+    # the violation and the metric frames
+    MetricBoundRule: lambda s, rules: tuple(
+        [frame] for frame in agg_rules.metric_bound_results(
+            s.df, rules, s.run_id, keep=s.keep
+        )
+    ),
+    # shard-pair distinct-set overlap: the engine knows its own group count
+    # when the audit groups by partition_id — passing it keeps construction
+    # LAZY (no eager guard job), so the sketch scan overlaps the other global
+    # stages inside finalize's concurrent block
+    OverlapRule: _each(lambda s, r: (overlap_ops.overlap_violations(
+        s.df, r, s.run_id, keep=s.keep,
+        n_groups=s.n_partitions() if r.group_column == "partition_id" else None,
+    ), None)),
+    VolumeRule: _each(lambda s, r: (_volume_violations(s, r), None)),
+}
+
+
+def global_results(
+    scope: GlobalScope, rules
+) -> tuple[list[DataFrame], list[DataFrame]]:
+    """(violation frames, metric frames) of global-stage rules, evaluated in
+    order through GLOBAL_EVALUATORS, one call per run of adjacent rules of
+    one kind."""
+    viols, mets = [], []
+    for cls, same in groupby(rules, type):
+        v, m = GLOBAL_EVALUATORS[cls](scope, tuple(same))
+        viols += v
+        mets += m
+    return viols, mets
+
+
 class ValidationRun:
     def __init__(
         self,
@@ -163,11 +343,10 @@ class ValidationRun:
         # e.g. bytes-per-pixel) — analyze now and require a NUMERIC result,
         # so a typo'd expr or a string-typed metric fails before any job
         # instead of yielding an all-NULL envelope that flags nothing
-        from .spec import OutlierRule as _OutlierRuleInit
         from pyspark.sql.types import BooleanType, NumericType
 
         for orr in self.program.group_rules:
-            if isinstance(orr, _OutlierRuleInit) and orr.expr:
+            if isinstance(orr, OutlierRule) and orr.expr:
                 _analyze_expr(
                     self.df, orr.id, orr.expr, "outlier expr",
                     "the input schema", required_type=NumericType,
@@ -176,10 +355,8 @@ class ValidationRun:
         # analyze each against the frame PRUNED to its declared columns so
         # an undeclared read (or a typo) is a SchemaError at init, and
         # require a boolean result; actual_expr only needs to resolve
-        from .spec import ExprRule as _ExprRule
-
         for er in self.program.row_rules:
-            if not isinstance(er, _ExprRule):
+            if not isinstance(er, ExprRule):
                 continue
             pruned = self.df.select(*[F.col(c) for c in er.columns])
             ctx = f"the declared columns {er.columns}"
@@ -192,16 +369,8 @@ class ValidationRun:
         # `when` predicates are SQL exprs with the same opacity —
         # analyze each against the real schema now (driver-side, no job) and
         # require a BOOLEAN result, so a typo'd or non-predicate `when` is a
-        # SchemaError before any job. Covers every scoped family: row rules
-        # plus the scoped aggregate/ref rules (unique, count, ref).
-        for rr in (
-            *self.program.row_rules,
-            *self.program.group_rules,
-            *self.program.count_rules,
-            *self.program.ref_rules,
-            *self.program.stats_rules,
-            *self.program.metric_bound_rules,
-        ):
+        # SchemaError before any job. Covers every kind with a `when` field.
+        for rr in self.spec.rules:
             w = getattr(rr, "when", "")
             if not w:
                 continue
@@ -226,8 +395,6 @@ class ValidationRun:
                 agg_rules._require_numeric(self.df, sr, "moments")
         # numeric metrics of a non-numeric column would be silent all-NULL
         # (→ spurious 'no value' violations) after the cast — reject now
-        from .spec import NUMERIC_BOUND_METRICS, parse_bound_metric
-
         for mb in self.program.metric_bound_rules:
             family, _q = parse_bound_metric(mb.metric)
             if family == "quantile" or mb.metric in NUMERIC_BOUND_METRICS:
@@ -723,8 +890,6 @@ class ValidationRun:
                     batch_df, cr, self.run_id, expected_partitions=partitions
                 )
             )
-        from .spec import CompositeRegexRule
-
         comp_caps = [
             r for r in prog.row_rules
             if isinstance(r, CompositeRegexRule) and r.capture
@@ -947,22 +1112,24 @@ class ValidationRun:
     def _frozen_edges(self, rule, batch_df: DataFrame) -> list:
         """Frozen bin edges for an incremental sweep rule: loaded from the
         checkpoint if a prior run froze them, else computed from the FIRST
-        validated batch and persisted. Bins only set the comparison's
-        resolution — every group is compared against the rest on the same
-        bins — so first-batch quantiles are a sound bin definition."""
-        if rule.id in self._drift_frozen_edges:
-            return self._drift_frozen_edges[rule.id]
+        validated batch with in-scope rows and persisted. Bins only set the
+        comparison's resolution — every group is compared against the rest
+        on the same bins — so first-batch quantiles are a sound bin
+        definition. A batch with no in-scope rows yields no edges (and an
+        empty partial): the record stays open for the next batch, so a
+        leading empty batch cannot pin every group into one bin."""
+        edges = self._drift_frozen_edges.get(rule.id)
         path = self._sink(f"drift_edges_{rule.id}.json")
-        if path and os.path.exists(path):
+        if edges is None and path and os.path.exists(path):
             with open(path) as f:
                 edges = json.load(f)
-        elif batch_df is not None:
+        if not edges and batch_df is not None:
             edges = drift_ops.compute_edges(batch_df, rule)
             if path:
                 os.makedirs(self.checkpoint_dir, exist_ok=True)
                 with open(path, "w") as f:
                     json.dump(edges, f)
-        else:
+        if edges is None:
             raise RuntimeError(
                 f"rule {rule.id!r}: drift partials exist but the frozen-edge "
                 "record is missing (checkpoint incomplete?) — cannot bin-merge"
@@ -1054,91 +1221,17 @@ class ValidationRun:
             return self.report()
 
         prog = self.program
-        viols: list[DataFrame] = []
-        mets: list[DataFrame] = []
-
-        for gr in prog.group_rules:
-            from .spec import CountRule, FunctionalDependencyRule, UniqueRule
-            from .spec import AssociationRule as _AssociationRule
-            from .spec import BenfordRule as _BenfordRule
-            from .spec import ConcentrationRule as _ConcentrationRule
-            from .spec import EmbeddingHealthRule as _EmbeddingHealthRule
-            from .spec import FreshnessRule as _FreshnessRule
-            from .spec import GapRule as _GapRule
-            from .spec import MonotonicRule as _MonotonicRule
-            from .spec import OutlierRule as _OutlierRule
-
-            if getattr(gr, "incremental", False):
-                continue  # merged from its partials below
-            if isinstance(gr, UniqueRule):
-                viols.append(
-                    agg_rules.unique_violations(self.df, gr, self.run_id)
-                )
-            elif isinstance(gr, _OutlierRule):
-                from .operators.outliers import outlier_violations
-
-                viols.append(
-                    outlier_violations(
-                        self.df, gr, self.run_id, self.spec.key_column
-                    )
-                )
-            elif isinstance(gr, _MonotonicRule):
-                from .operators.sequence import monotonic_violations
-
-                viols.append(
-                    monotonic_violations(
-                        self.df, gr, self.run_id, self.spec.key_column
-                    )
-                )
-            elif isinstance(gr, FunctionalDependencyRule):
-                viols.append(agg_rules.fd_violations(self.df, gr, self.run_id))
-            elif isinstance(gr, _AssociationRule):
-                from .operators.association import association_rule_results
-
-                a_viol, a_met = association_rule_results(
-                    self.df, gr, self.run_id
-                )
-                viols.append(a_viol)
-                mets.append(a_met)
-            elif isinstance(gr, _FreshnessRule):
-                viols.append(
-                    agg_rules.freshness_violations(self.df, gr, self.run_id)
-                )
-            elif isinstance(
-                gr, (_BenfordRule, _ConcentrationRule, _EmbeddingHealthRule)
-            ):
-                # a partials family without incremental=True: full scan
-                from .operators.digits import benford_rule_results
-                from .operators.similarity import embedding_health_rule_results
-                from .operators.skew import concentration_rule_results
-
-                g_viol, g_met = {
-                    _BenfordRule: benford_rule_results,
-                    _ConcentrationRule: concentration_rule_results,
-                    _EmbeddingHealthRule: embedding_health_rule_results,
-                }[type(gr)](self.df, gr, self.run_id)
-                viols.append(g_viol)
-                mets.append(g_met)
-            elif isinstance(gr, _GapRule):
-                from .operators.gaps import gap_violations
-
-                viols.append(gap_violations(self.df, gr, self.run_id))
-            elif isinstance(gr, CountRule):
-                viols.append(
-                    agg_rules.count_violations(
-                        self.df, gr, self.run_id,
-                        universe=self.dims.get(gr.universe) if gr.universe else None,
-                    )
-                )
-
-        if prog.metric_bound_rules:
-            # all bounds fuse into one aggregation pass; the 1-row result
-            # feeds both the violation and the metric frames
-            mb_viol, mb_met = agg_rules.metric_bound_results(
-                self.df, prog.metric_bound_rules, self.run_id, keep=self._keep
-            )
-            viols.append(mb_viol)
-            mets.append(mb_met)
+        # global-stage kinds evaluate through GLOBAL_EVALUATORS, in two calls
+        # around the merge of the incremental families' partials (which the
+        # table skips) so frames and eager jobs keep their order
+        scope = GlobalScope(
+            self.df, self.run_id, self.spec, self.dims, self._keep,
+            lambda: len(self.all_partitions()), self.manifest,
+        )
+        viols, mets = global_results(scope, (
+            *(r for r in prog.group_rules if not getattr(r, "incremental", False)),
+            *prog.metric_bound_rules,
+        ))
 
         # full-scan stats and plain drift histograms FUSE into one global
         # aggregation job (see _run_fused_global below) — the stats rules
@@ -1163,107 +1256,11 @@ class ValidationRun:
                 viols.append(p_viol)
             mets.append(p_met)
 
-        for sq in prog.sequence_rules:  # groups may span engine partitions
-            from .operators.sequence import sequence_violations
-
-            viols.append(
-                sequence_violations(self.df, sq, self.run_id, self.spec.key_column)
-            )
-
-        for ov in prog.overlap_rules:  # shard-pair distinct-set overlap
-            from .operators.overlap import overlap_violations
-
-            # the engine knows its own group count when the audit groups by
-            # partition_id — passing it keeps construction LAZY (no eager
-            # guard job), so the sketch scan overlaps the other global
-            # stages inside the concurrent block below
-            hint = (
-                len(self.all_partitions())
-                if ov.group_column == "partition_id"
-                else None
-            )
-            viols.append(
-                overlap_violations(
-                    self.df, ov, self.run_id, n_groups=hint, keep=self._keep
-                )
-            )
-
-        if prog.volume_rules:
-            # zero-scan stage: the MAD envelope over the manifest's own
-            # per-partition validated row counts (spec.VolumeRule docs) —
-            # O(#partitions) driver math over metadata the run already paid
-            # for, including zero-row partitions. statistics.median matches
-            # the operator/oracle interpolation (mean of middle two).
-            import statistics
-
-            counted = sorted(
-                (pid, float(e["rows"]))
-                for pid, e in self.manifest.entries.items()
-                if e.get("rows") is not None
-            )
-            for vr in prog.volume_rules:
-                rows_out = []
-                if vr.universe:
-                    # wholly-missing partitions (data-derived ids never get
-                    # a manifest entry — spec.VolumeRule docs): enumerate
-                    # expected ids from the dims table, diff against the
-                    # manifest. Absence is a fact, not an outlier —
-                    # unconditional under_volume, independent of the MAD
-                    # envelope and min_partitions. O(#partitions) rows.
-                    ucol = (
-                        vr.universe_column
-                        or self.spec.partition_column
-                        or "partition_id"
-                    )
-                    expected_ids = {
-                        int(r[0])
-                        for r in self.dims[vr.universe]
-                        .select(F.col(ucol).cast("long"))
-                        .where(F.col(ucol).isNotNull())
-                        .distinct()
-                        .collect()
-                    }
-                    have = {int(pid) for pid, _ in counted}
-                    col = self.spec.partition_column or "partition_id"
-                    for pid in sorted(expected_ids - have):
-                        rows_out.append(
-                            (
-                                self.run_id,
-                                int(pid),
-                                vr.id,
-                                str(pid),
-                                col,
-                                "partition present (>= 1 row)",
-                                "missing",
-                                KIND_UNDER_VOLUME,
-                            )
-                        )
-                if len(counted) >= vr.min_partitions:
-                    ns = [n for _, n in counted]
-                    center = statistics.median(ns)
-                    mad = statistics.median([abs(n - center) for n in ns])
-                    bound = max(vr.abs_tol, vr.k * 1.4826 * mad)
-                    col = self.spec.partition_column or "partition_id"
-                    for pid, n in counted:
-                        if abs(n - center) > bound:
-                            rows_out.append(
-                                (
-                                    self.run_id,
-                                    int(pid),
-                                    vr.id,
-                                    str(pid),
-                                    col,
-                                    f"rows in [{center - bound:.1f}, "
-                                    f"{center + bound:.1f}]",
-                                    str(int(n)),
-                                    KIND_OVER_VOLUME if n > center
-                                    else KIND_UNDER_VOLUME,
-                                )
-                            )
-                if rows_out:
-                    viols.append(
-                        self.spark.createDataFrame(rows_out, _VIOLATIONS_DDL)
-                    )
+        more_viols, more_mets = global_results(
+            scope, (*prog.sequence_rules, *prog.overlap_rules, *prog.volume_rules)
+        )
+        viols += more_viols
+        mets += more_mets
 
         t0 = time.time()
         drift_futs = []

@@ -30,7 +30,7 @@ Rule families and their reference ancestors:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional, Sequence
+from typing import ClassVar, Optional, Sequence
 
 
 @dataclass(frozen=True)
@@ -40,8 +40,10 @@ class Rule:
 
     id: str
 
-    # subclasses override
+    # subclasses override: ``kind`` is the JSON name (spec_io.RULE_KINDS),
+    # ``stage`` names the ConstraintProgram tuple ``<stage>_rules``
     kind: str = field(default="base", init=False)
+    stage: ClassVar[str]
 
     # SOFT-RULE tolerance: None (default) keeps the reference's hard
     # pass/fail semantics — any violation fails the run (main.rs:86-90).
@@ -76,6 +78,7 @@ class NotNullRule(Rule):
     #: where the predicate is FALSE or NULL are out of scope (pass).
     when: str = ""
     kind: str = field(default="not_null", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -95,6 +98,7 @@ class RegexRule(Rule):
     full: bool = True
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="regex", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -150,6 +154,7 @@ class CompositeRegexRule(Rule):
     capture_as_rows: bool = False
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="composite", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -175,6 +180,7 @@ class LiteralRule(Rule):
     other_column: Optional[str] = None  # column to equal (e.g. caption round-trip)
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="literal", init=False)
+    stage = "row"
 
     def targets(self):
         t = [self.column]
@@ -190,6 +196,7 @@ class RangeRule(Rule):
     max: Optional[float] = None
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="range", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -204,6 +211,7 @@ class DomainRule(Rule):
     values: tuple[str, ...] = ()
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="domain", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -232,6 +240,7 @@ class VectorRule(Rule):
     forbid_nan: bool = True
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="vector", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -264,6 +273,7 @@ class AlignmentRule(Rule):
     max_cos: Optional[float] = None
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="alignment", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column_a, self.column_b)
@@ -325,6 +335,7 @@ class HeaderRule(Rule):
     min_length: int = 0  # 0 = derived from the deepest offset any check reads
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="header", init=False)
+    stage = "row"
 
     def __post_init__(self):
         # accept dicts (ergonomic) and normalize to sorted tuple pairs so the
@@ -416,6 +427,7 @@ class ExprRule(Rule):
     actual_expr: str = ""
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="expr", init=False)
+    stage = "row"
 
     def targets(self):
         return self.columns
@@ -475,6 +487,7 @@ class FormatRule(Rule):
     format: str = "int"
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="format", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -499,6 +512,7 @@ class PiiRule(Rule):
     kinds: tuple[str, ...] = ()
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="pii", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -524,6 +538,7 @@ class RepetitionRule(Rule):
     min_words: int = 20
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="repetition", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -548,6 +563,7 @@ class TextQualityRule(Rule):
     max: Optional[float] = None
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="text_quality", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -568,6 +584,7 @@ class UniqueRule(Rule):
     columns: tuple[str, ...] = ()
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="unique", init=False)
+    stage = "group"
 
     def targets(self):
         return self.columns
@@ -598,6 +615,10 @@ class CountRule(Rule):
     # a group/partition with zero IN-SCOPE rows counts as 0
     when: str = ""
     kind: str = field(default="count", init=False)
+
+    @property
+    def stage(self) -> str:  # grouped counts are global, ungrouped per partition
+        return "group" if self.group_by else "count"
 
     def targets(self):
         return self.group_by
@@ -630,6 +651,7 @@ class FunctionalDependencyRule(Rule):
     dependents: tuple[str, ...] = ()
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="fd", init=False)
+    stage = "group"
 
     def targets(self):
         return self.determinants + self.dependents
@@ -658,6 +680,7 @@ class MonotonicRule(Rule):
     strict: bool = False
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="monotonic", init=False)
+    stage = "group"
 
     def targets(self):
         return (self.column, self.order_column, *self.group_by)
@@ -705,6 +728,7 @@ class OutlierRule(Rule):
     exact: bool = False
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="outlier", init=False)
+    stage = "group"
 
     def __post_init__(self):
         if self.k == 0.0:
@@ -743,6 +767,7 @@ class AssociationRule(Rule):
     max_v: float | None = None
     max_cells: int = 0  # 0 → operators.association.MAX_ASSOC_CELLS
     kind: str = field(default="association", init=False)
+    stage = "group"
 
     def targets(self):
         return (self.col_a, self.col_b)
@@ -784,6 +809,7 @@ class BenfordRule(Rule):
     # plus an O(#partitions) merge.
     incremental: bool = False
     kind: str = field(default="benford", init=False)
+    stage = "group"
 
     def targets(self):
         return (self.column,)
@@ -811,6 +837,7 @@ class GapRule(Rule):
     bucket_seconds: int = 86_400
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="gap", init=False)
+    stage = "group"
 
     def targets(self):
         return (self.column, *self.group_by)
@@ -872,6 +899,7 @@ class ConcentrationRule(Rule):
     # (compile refuses; grouped partials would key on (group, value)).
     incremental: bool = False
     kind: str = field(default="concentration", init=False)
+    stage = "group"
 
     def targets(self):
         return (self.column, *self.group_by)
@@ -922,6 +950,7 @@ class EmbeddingHealthRule(Rule):
     # embedding_health_partials).
     incremental: bool = False
     kind: str = field(default="embedding_health", init=False)
+    stage = "group"
 
     def targets(self):
         return (self.column,)
@@ -953,6 +982,7 @@ class FreshnessRule(Rule):
     group_by: tuple[str, ...] = ()
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="freshness", init=False)
+    stage = "group"
 
     def targets(self):
         return (self.column, *self.group_by)
@@ -1004,6 +1034,7 @@ class VolumeRule(Rule):
     universe: str = ""  # dims table enumerating expected partition ids
     universe_column: str = ""  # its id column; default = the partition col
     kind: str = field(default="volume", init=False)
+    stage = "volume"
 
 
 # --------------------------------------------------------- referential rules
@@ -1037,6 +1068,7 @@ class RefIntegrityRule(Rule):
     columns: tuple[str, ...] = ()
     dim_columns: tuple[str, ...] = ()
     kind: str = field(default="ref", init=False)
+    stage = "ref"
 
     def fact_keys(self) -> tuple[str, ...]:
         return self.columns or (self.column,)
@@ -1116,6 +1148,7 @@ class ColumnStatsRule(Rule):
     # into ONE aggregation pass (full-scan AND incremental-partials paths).
     when: str = ""
     kind: str = field(default="stats", init=False)
+    stage = "stats"
 
     def targets(self):
         return (self.column,)
@@ -1192,6 +1225,7 @@ class MetricBoundRule(Rule):
     #: Rules sharing a group_by fuse into one groupBy pass.
     group_by: str = ""
     kind: str = field(default="metric_bound", init=False)
+    stage = "metric_bound"
 
     def targets(self):
         return (self.column, self.group_by) if self.group_by else (self.column,)
@@ -1232,6 +1266,7 @@ class CaptureRule(Rule):
     # are unbounded (the 100x-safe variant, reachable from a spec).
     as_rows: bool = False
     kind: str = field(default="capture", init=False)
+    stage = "capture"
 
     def targets(self):
         return (
@@ -1276,6 +1311,7 @@ class SequenceRule(Rule):
     order_column: str = ""
     steps: tuple[SequenceStep, ...] = ()
     kind: str = field(default="sequence", init=False)
+    stage = "sequence"
 
     def targets(self):
         return (self.column, self.order_column, *self.group_by)
@@ -1303,6 +1339,7 @@ class SchemaRule(Rule):
     expected: tuple[tuple[str, str], ...] = ()
     allow_extra: bool = False
     kind: str = field(default="schema", init=False)
+    stage = "schema"
 
     def targets(self):
         # validated against df.schema metadata, never against row values —
@@ -1336,6 +1373,7 @@ class OverlapRule(Rule):
     lg_k: int = 12
     max_groups: int = 256
     kind: str = field(default="overlap", init=False)
+    stage = "overlap"
 
     def targets(self):
         cols = (self.column,)
@@ -1401,6 +1439,7 @@ class DriftRule(Rule):
     # partition's histogram, never the full-table pass.
     incremental: bool = False
     kind: str = field(default="drift", init=False)
+    stage = "drift"
 
     def targets(self):
         # with expr the drifting quantity is a SQL expression — its inputs
@@ -1438,6 +1477,7 @@ class PixelRule(Rule):
     # IO-level reduction validate a partition subset instead.
     sample_rate: float = 1.0
     kind: str = field(default="pixel", init=False)
+    stage = "pixel"
 
     def targets(self):
         return (
@@ -1482,6 +1522,7 @@ class DegenerateImageRule(Rule):
     # sample_rate governs (one decode pass, one sample).
     sample_rate: float = 1.0
     kind: str = field(default="degenerate", init=False)
+    stage = "degenerate"
 
     def targets(self):
         return (self.bytes_column,)

@@ -10,10 +10,12 @@ files landing in a table directory (the Iceberg-snapshot pattern). Each
      (the read_input tail computation),
   2. runs the per-partition rule stages on ONLY the new files,
   3. appends violations/metrics idempotently.
-``finalize()`` is got_eof: the global rules (uniqueness, drift, grouped
-counts) run once over the full table — the EOF revalidation pass
-(validator.rs:162-168). ``fast_fail`` aborts polling once any batch goes red
-(cmd.rs:119-121).
+``finalize()`` is got_eof: the global rules (uniqueness, grouped counts,
+stats, drift and the other whole-table kinds, through the same evaluator
+table as ValidationRun.finalize) run once over the full table — the EOF
+revalidation pass (validator.rs:162-168). ``fast_fail`` aborts polling once
+any batch goes red (cmd.rs:119-121). A kind this validator cannot evaluate is
+refused at the first poll, never skipped.
 """
 
 from __future__ import annotations
@@ -23,14 +25,25 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..compile import compile_spec
+from ..errors import SchemaError
 from ..operators import agg_rules, drift as drift_ops, pixel as pixel_ops
 from ..operators.ref_rules import ref_violations
 from ..operators.row_rules import row_violations, with_partition_id
-from ..run import _METRICS_DDL, _VIOLATIONS_DDL, _empty, _union
-from ..spec import CountRule, Spec, UniqueRule
+from ..run import (
+    GLOBAL_STAGES, GlobalScope, _METRICS_DDL, _VIOLATIONS_DDL, global_results,
+    _union,
+)
+from ..spec import Spec
+
+# stages poll() evaluates on each new file set, then the ones finalize()
+# evaluates over the whole table. Volume is not among them: it needs the
+# per-partition row counts of a manifest, which this validator does not keep.
+_STAGES = (
+    "schema", "row", "ref", "count", "pixel", "stats", "drift",
+    *(s for s in GLOBAL_STAGES if s != "volume"),
+)
 
 
 class FileIncrementalValidator:
@@ -115,6 +128,14 @@ class FileIncrementalValidator:
     def poll(self) -> int:
         """Validate newly-arrived files; returns the number of new violation
         rows. No-op (0) when nothing new or fast-fail already tripped."""
+        for r in self.spec.rules:
+            capture = getattr(r, "capture", False) is True  # composite capture
+            if r.stage not in _STAGES or capture:
+                raise SchemaError(
+                    f"rule {r.id!r}: FileIncrementalValidator cannot evaluate "
+                    f"{r.kind} rules{' with capture=True' if capture else ''} "
+                    "— validate the table with ValidationRun instead"
+                )
         if self._red and self.spec.fast_fail:
             return 0
         new = self.pending_files()
@@ -184,11 +205,12 @@ class FileIncrementalValidator:
         if all_files and self.program is not None:
             df = with_partition_id(self.spark.read.parquet(*all_files), self.spec)
             prog = self.program
-            for gr in prog.group_rules:
-                if isinstance(gr, UniqueRule):
-                    viols.append(agg_rules.unique_violations(df, gr, self.run_id))
-                elif isinstance(gr, CountRule):
-                    viols.append(agg_rules.count_violations(df, gr, self.run_id))
+            g_viols, g_mets = global_results(
+                GlobalScope(df, self.run_id, self.spec, self.dims),
+                [r for s in GLOBAL_STAGES for r in getattr(prog, f"{s}_rules")],
+            )
+            viols += g_viols
+            mets += g_mets
             if prog.stats_rules:
                 mets.append(
                     agg_rules.column_stats_metrics(df, prog.stats_rules, self.run_id)

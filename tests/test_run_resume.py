@@ -522,3 +522,39 @@ def test_resume_after_empty_batch(spark, tmp_path, rule):
     assertDataFrameEqual(resumed.metrics, expected.metrics)
     assertDataFrameEqual(resumed.violations, expected.violations)
     assert resumed.metrics.where(F.col("rule_id") == rule.id).count() > 0
+
+
+def test_sweep_drift_edges_freeze_on_first_batch_with_rows(spark, tmp_path):
+    """An incremental sweep freezes its bin edges on the first batch with
+    in-scope rows. A leading empty batch yields no edges; freezing those
+    would put every value in one bin, and no group could ever drift. A run
+    whose batches are all empty still finalizes."""
+    rows = [
+        (f"k{i}", float(i % 10) if i % 2 else float(100 + i % 10),
+         "png" if i % 2 else "jpeg")
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "image_id string, w double, fmt string")
+    rule = DriftRule(
+        "sw_w", column="w", sweep_by="fmt", method="psi", threshold=0.5,
+        incremental=True,
+    )
+    spec = Spec(rules=(rule,), key_column="image_id", n_partitions=64)
+    run = ValidationRun(
+        spark, spec, df, run_id="r-edges", checkpoint_dir=str(tmp_path / "ck")
+    )
+    occupied = {r["partition_id"] for r in run.df.select("partition_id").collect()}
+    run._validate_batch([min(set(range(64)) - occupied)])
+    report = run.validate()
+    assert report.violations.where(F.col("rule_id") == "sw_w").count() > 0
+    straight = ValidationRun(spark, spec, df, run_id="r-edges").validate()
+    assertDataFrameEqual(report.violations, straight.violations)
+
+    no_rows = df.withColumn("w", F.lit(None).cast("double"))
+    ckpt = str(tmp_path / "ck-none")
+    ValidationRun(spark, spec, no_rows, run_id="r-none", checkpoint_dir=ckpt)\
+        ._validate_batch([0])
+    resumed = ValidationRun(
+        spark, spec, no_rows, run_id="r-none", checkpoint_dir=ckpt
+    ).validate()
+    assert resumed.violations.count() == 0

@@ -1141,3 +1141,62 @@ def test_stream_health_partials_accumulate_and_merge(spark, tmp_path):
     sv = sorted(r["expected"] for r in viol.collect())
     assert sv == sorted(r["expected"] for r in b_viol.collect())
     assert sv == ["dead_dims <= 0"]
+
+
+def test_file_validator_evaluates_global_kinds_like_batch(spark, tmp_path):
+    """FileIncrementalValidator.finalize evaluates every global-stage kind
+    through the same table as ValidationRun.finalize: FD, outlier, metric
+    bound and unique rules report what a batch run over the same file
+    reports, instead of nothing."""
+    from collections import Counter
+
+    from mdvalidate_spark.run import ValidationRun
+    from mdvalidate_spark.spec import (
+        FunctionalDependencyRule, MetricBoundRule, OutlierRule, UniqueRule,
+    )
+
+    rows = [
+        (f"img{i:02d}", f"g{i % 3}", 9 if i == 7 else i % 3,
+         500.0 if i == 29 else float(i))
+        for i in range(30)
+    ]
+    table = str(tmp_path / "tbl")
+    spark.createDataFrame(
+        rows, "image_id string, g string, v int, x double"
+    ).coalesce(1).write.parquet(table)
+    spec = Spec(
+        rules=(
+            FunctionalDependencyRule("fd", determinants=("g",), dependents=("v",)),
+            OutlierRule("out", column="x", method="iqr", k=1.5),
+            MetricBoundRule("mb", column="x", metric="max", max=100),
+            UniqueRule("uq", columns=("image_id",)),
+        ),
+        key_column="image_id",
+        n_partitions=4,
+    )
+    v = FileIncrementalValidator(spark, spec, table, run_id="kinds")
+    v.poll()
+    viols, _ = v.finalize()
+    got = Counter(r["rule_id"] for r in viols.collect())
+    batch = ValidationRun(
+        spark, spec, spark.read.parquet(table), run_id="kinds"
+    ).validate()
+    assert got == Counter(r["rule_id"] for r in batch.violations.collect())
+    assert got == Counter({"fd": 1, "out": 1, "mb": 1})
+
+
+def test_file_validator_refuses_kinds_it_cannot_evaluate(spark, tmp_path):
+    """A volume rule needs manifest row counts the file validator does not
+    keep: the first poll refuses it by name instead of skipping it."""
+    from mdvalidate_spark.errors import SchemaError
+    from mdvalidate_spark.spec import VolumeRule
+
+    table = str(tmp_path / "tbl")
+    spark.createDataFrame([("a", 1)], "image_id string, w int").write.parquet(table)
+    spec = Spec(
+        rules=(RangeRule("w_range", column="w", min=0, max=9), VolumeRule("vol")),
+        key_column="image_id",
+    )
+    v = FileIncrementalValidator(spark, spec, table, run_id="vol")
+    with pytest.raises(SchemaError, match="'vol'.*volume"):
+        v.poll()
